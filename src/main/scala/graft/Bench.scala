@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.cpus
     // Quiet-host gate (round-13): host contention inflated the recorded
     // r11 driver bench ~50% and the r12 one ~20% vs the same binary on
     // a quiet machine — the measured signature is uniform inflation of
@@ -22,6 +22,8 @@ object Bench {
       val parts = scala.io.Source.fromFile("/proc/loadavg").mkString.split(" ")
       (parts(0).toDouble, parts(1).toDouble)
     }.getOrElse((0.0, 0.0))
+    def logFailure(name: String, e: Throwable): Unit =
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
     var gateWaited = 0
     var load = if (gateLevel > 0) loadAvg() else (0.0, 0.0)
     while (gateLevel > 0 &&
@@ -29,22 +31,7 @@ object Bench {
            gateWaited < gateMax) {
       Thread.sleep(15000); gateWaited += 15; load = loadAvg()
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Spark's generated-class cache defaults to 100 entries; this
-      // suite compiles far more (137 queries, iterative families
-      // codegen fresh plans per round), so the LRU thrashes and big
-      // plans recompile at their timed run — measured q106 19.3 s
-      // (evicted) vs 7.1 s (cached), whole-suite 146 s → 109 s. Any
-      // production cluster running a workload this wide would raise it.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Untimed warm-up: absorb one-time session costs (janino codegen,
     // parquet footer reads, shuffle/broadcast thread pools) so the timed
     // numbers measure query cost, not JVM startup — round-1 profiles
@@ -76,7 +63,7 @@ object Bench {
                   // dupGroups/medoid representatives (q111): its CC
                   // loop + medoid scoring codegen 89 classes that
                   // otherwise JIT inside the timed run (~2 s measured
-                  // by CodegenProbe r13)
+                  // by CodegenProbe@25567d8)
                   "q111_dedup_reps",
                   // driver-looped BPE rounds (per-round fold codegen)
                   // and the composed corpus funnels (window gate +
@@ -89,7 +76,7 @@ object Bench {
       // count()-pruned plan (the r8 honesty rule applies to warm-up
       // too — a count() warm-up leaves the first timed full plan cold)
       try SparkEntry.queries(w)(spark, sfDir).queryExecution.toRdd.count()
-      catch { case _: Throwable => }
+      catch { case NonFatal(e) => logFailure(w, e) }
     // drop the warm-up queries' checkpoint blocks so the first timed
     // query doesn't run under their GC pressure
     spark.sparkContext.getPersistentRDDs.values
@@ -117,6 +104,7 @@ object Bench {
     // explicitly so their protocols keep one timed region per JVM).
     val legs = math.max(1, scala.util.Try(
       sys.env.getOrElse("SPARK_GRAFT_BENCH_LEGS", "2").toInt).getOrElse(2))
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
     def runLeg(): Seq[(String, Double)] =
       SparkEntry.queries.toSeq.map { case (name, fn) =>
         val t0 = System.nanoTime()
@@ -125,8 +113,11 @@ object Bench {
         // count doesn't need — for 1:1 transform queries that is the
         // whole operator (q103's scrub benched as a bare parquet count
         // until round 8). Rows are produced but not collected.
+        // a query that throws still yields a time, so the query is
+        // also listed under "failed" and the run exits nonzero: a
+        // broken query must never read as a fast one
         try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => -1L }
+        catch { case NonFatal(e) => logFailure(name, e); failed += name }
         val dt = (System.nanoTime() - t0) / 1e9
         // queries are independent and sequential here: drop this query's
         // persisted/locally-checkpointed blocks so they don't pile up into
@@ -171,6 +162,7 @@ object Bench {
       s""""load_gate":{"waited_s":$gateWaited,"load1":${load._1},""" +
       s""""load5":${load._2},"post_load1":${loadPost._1},""" +
       s""""post_load5":${loadPost._2}},""" +
+      s""""failed":[${failed.map("\"" + _ + "\"").mkString(",")}],""" +
       s""""metric":"total","value":$total,"unit":"sec"}"""
     // the full per-query map (≈4 KB for 137 queries) overflows the
     // ~2 KB stdout tail the driver archives — BENCH_r7 came back
@@ -193,5 +185,6 @@ object Bench {
     println(full)
     println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"detail":"$outPath"}""")
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

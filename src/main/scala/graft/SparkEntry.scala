@@ -52,13 +52,13 @@ object SparkEntry {
     // makes Spark's distinct-agg rewrite carry all four 128-bit
     // decimal partials through the (group, l_orderkey) distinct phase
     // — every distinct-shuffle row widens by 4 decimals (measured
-    // 1.59 s fused vs 0.89 s split at sf0.1, graft.tools.Q01Probe;
-    // the round-9 adjudication of q01's bench wall). The rejoin is a
-    // broadcast of one row per group. NB: the inner equi-join assumes
-    // NON-NULL group keys (true for l_returnflag/l_linestatus); a
-    // fused aggregate would keep NULL-key groups that this join drops
-    // — use null-safe equality (<=>) if copying the pattern to
-    // nullable keys.
+    // 1.59 s fused vs 0.89 s split at sf0.1,
+    // graft.tools.Q01Probe@25567d8; the round-9 adjudication of q01's
+    // bench wall). The rejoin is a broadcast of one row per group.
+    // NB: the inner equi-join assumes NON-NULL group keys (true for
+    // l_returnflag/l_linestatus); a fused aggregate would keep NULL-key
+    // groups that this join drops — use null-safe equality (<=>) if
+    // copying the pattern to nullable keys.
     val li = Tables.lineitem(s, d)
     val sums = li
       .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -806,7 +806,7 @@ object SparkEntry {
     * doubles), scored by per-query lookup tables, and only the ADC
     * top candidate ids rejoin full vectors for the exact cosine.
     * Approximate by construction → rows-only; measured recall pinned in
-    * ProductQuantizerSpec. rerank=100 per the r17 FloatAnnDialProbe
+    * ProductQuantizerSpec. rerank=100 per the r17 FloatAnnDialProbe@25567d8
     * sweep (table in adcTopK's scaladoc + SCALE_AUDIT): the old
     * rerank=50 read recall@5 0.66 at sf0.1 while 100 reads 0.78 at
     * FLAT wall (0.46 vs 0.50 s) — the q145 cost-neutral-dial move
@@ -926,18 +926,7 @@ object SparkEntry {
       .join(Tables.supplier(s, d), col("l_suppkey") === col("s_suppkey"))
       .select(col("c_nationkey").cast("string").as("src"),
         col("s_nationkey").cast("string").as("dst"))
-    // checkpointEvery=1 (r17): with cuts every 2 rounds, each
-    // UN-checkpointed round executed twice at the next cut — ranks is
-    // referenced by both the contribs join and the dangling-mass agg,
-    // and no ReusedExchange fires across localCheckpoint-rooted
-    // subtrees (plans/r17/q34_pagerank_before.txt: 44 exchanges in the
-    // 2-round tail, zero reuse). Per 2 rounds that is 3 edge-join
-    // executions vs 2 + one extra node-sized checkpoint — strictly
-    // less work at scale, and measured faster here too (R17Probe cpe
-    // A/B, sf0.1 min-of-3 ×2 blocks: 3.26/3.94 s vs 5.19/5.34 s).
-    // Pure materialization policy — scores are bit-identical.
-    graft.graph.PageRank.runScaled(edges, iterations = 10,
-      checkpointEvery = 1)
+    graft.graph.PageRank.runScaled(edges, iterations = 10)
   }
 
   /** DuckDB oracle for [[q34_pagerank]]: the same fixed-point recurrence
@@ -1465,12 +1454,8 @@ object SparkEntry {
     val seeds = edges.select(col("src").as("node"))
       .unionByName(edges.select(col("dst").as("node"))).distinct()
       .orderBy(col("node").cast("int").asc).limit(3)
-    // checkpointEvery=1 for the same reason as q34: the dangling-mass
-    // branch re-executes every un-checkpointed round (no exchange
-    // reuse across checkpoint-rooted subtrees) — cutting every round
-    // is strictly less join work per iteration pair
     graft.graph.PageRank.runScaledPersonalized(edges, seeds,
-      iterations = 10, checkpointEvery = 1)
+      iterations = 10)
   }
 
   /** Time-series gap fill (ops/TimeSeries.interpolate): daily per-type
@@ -2009,7 +1994,7 @@ object SparkEntry {
     * the SAME DuckDB oracle re-derives this query end to end — the
     * 100 TB serving shape gets its own hash-green row.
     *
-    * Cost split (r17 IvfPqServeProbe, SCALE_AUDIT): the bench row's
+    * Cost split (r17 IvfPqServeProbe@25567d8, SCALE_AUDIT): the bench row's
     * sf10 14.79 s is BUILD (train + full store write) + probe on a
     * cold path; the SERVING cost — a probe against the pre-built
     * index, the number a 100× operator pays per query batch — is
@@ -4931,7 +4916,7 @@ object SparkEntry {
     // residual sums go negative), nprobe=4 coarse probe, per-(query,
     // probed-cell) residual ADC, top-100 reranked by exact integer L2,
     // top-5 — step-for-step the graft.sim.IvfPqInt pipeline at the r16
-    // measured defaults (IvfPqDialProbe: recall@5 0.68/0.50 at
+    // measured defaults (IvfPqDialProbe@25567d8: recall@5 0.68/0.50 at
     // sf0.01/sf0.1, vs 0.22 at the r15 floor point)
     "q145_ivfpq_int_ann" -> ivfPqPipelineSql,
     // q146 probes the persisted index built from the same corpus with

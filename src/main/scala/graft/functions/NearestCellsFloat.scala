@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * `array_max`/`array_sort` chain still ran on every q104/q108 corpus
   * row, every `ivfTopKTrained` corpus row (q27), once per Lloyd
   * iteration over the whole training frame, and on every
-  * SemanticIngestJob batch — the EXACT pattern SemanticIntScaleProbe
+  * SemanticIngestJob batch — the EXACT pattern SemanticIntScaleProbe@25567d8
   * measured at 8.5–60× slower than the codegen kernel on the integer
   * family (cells=64: 84 s interpreted vs 1.41 s kernel'd, sf10).
   *

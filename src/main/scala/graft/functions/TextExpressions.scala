@@ -25,7 +25,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * whole-stage codegen.
   *
   * Value identity with the built-in tree it replaces (pinned to 0
-  * mismatches by tools/FeatureProbe): tokenization is literally
+  * mismatches by FeatureProbe@25567d8): tokenization is literally
   * `lower → trim → Java-regex split "\\s+" limit −1` — the same
   * UTF8String.toLowerCase / .trim methods Lower/StringTrim call and
   * the same Pattern.split semantics StringSplit delegates to; a token

@@ -18,10 +18,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale notes: edges shuffle once on src per iteration (ranks are tiny —
   * one row per node — so the join broadcasts them when they fit); lineage
-  * is cut every `checkpointEvery` iterations (localCheckpoint) or the plan
-  * grows exponentially (SURVEY.md §7.3) — each iteration references
-  * `ranks` twice (contribs + dangling mass), so the default cuts every
-  * iteration, the standard practice for iterative DataFrame algorithms.
+  * is cut every iteration (localCheckpoint) or the plan grows
+  * exponentially (SURVEY.md §7.3), the standard practice for iterative
+  * DataFrame algorithms.
   */
 object PageRank {
 
@@ -37,15 +36,14 @@ object PageRank {
     * n / |seeds| / dangling counts on the node cut; the per-round
     * dangling mass on the round's checkpoint), the dangling-node flag
     * lives ON the rank rows (is_dang — no per-round anti-join subtree,
-    * no separate dangling-nodes snapshot), and when the previous round
-    * is materialized the dangling mass enters the next round's plan as
-    * a LITERAL (bit-identical value, zero extra jobs) instead of a
-    * broadcast 1-row subquery. When the node set is small enough to
-    * broadcast (`BcastNodesMaxKey`, default 1M rows), the per-round
-    * joins hint broadcast on the node-sized side, so the edge frame is
-    * never shuffled inside an iteration — the correct shape at every
-    * scale where nodes ≪ edges fit executor memory; past the bound the
-    * loop keeps the shuffle joins.
+    * no separate dangling-nodes snapshot), and the dangling mass
+    * observed on the previous round's checkpoint enters the next
+    * round's plan as a LITERAL (zero extra jobs). When the node set is
+    * small enough to broadcast (`BcastNodesMaxKey`, default 1M rows),
+    * the per-round joins hint broadcast on the node-sized side, so the
+    * edge frame is never shuffled inside an iteration — the correct
+    * shape at every scale where nodes ≪ edges fit executor memory; past
+    * the bound the loop keeps the shuffle joins.
     *
     * NOTE [[Observation.get]] blocks until an action materializes the
     * observed frame — sound here only because Snapshots.cut/cutSized
@@ -58,18 +56,18 @@ object PageRank {
     * @param update   (n, contrib, Some(danglingMass)?) → new score
     * @param onIter   (iteration, seconds) after each eagerly
     *   materialized iteration — the skew-probe instrumentation hook;
-    *   fires only for checkpointed iterations (the last one is lazy
-    *   until the caller's action)
+    *   fires for every iteration but the last, which is lazy until the
+    *   caller's action
     * @param tolerance when set, stop as soon as the L1 delta
-    *   Σ|score − score_prevCheckpoint| < tolerance. Checked only at
-    *   checkpoint boundaries, where BOTH compared frames are already
+    *   Σ|score − score_prev| < tolerance. Checked after each
+    *   checkpointed iteration, where BOTH compared frames are already
     *   materialized — the delta is one co-partitioned join + 1-row agg
     *   over node-count rows, nothing of the edge-shuffle iteration is
     *   recomputed. At 100 TB each saved round is a full edge shuffle;
     *   a converged graph stops paying them. None (the default) keeps
     *   the exact fixed-iteration schedule — the bit-reproducible
     *   oracle contract (q34/q95) stays byte-identical. */
-  private def loop(edges: DataFrame, iterations: Int, checkpointEvery: Int,
+  private def loop(edges: DataFrame, iterations: Int,
                    init: (Long, Long) => Column, contrib: Column, zero: Column,
                    update: (Long, Long, Column, Option[Column]) => Column,
                    onIter: (Int, Double) => Unit = (_, _) => (),
@@ -141,15 +139,14 @@ object PageRank {
       .observe(obs0,
         sum(when(col("is_dang") === 1, col("score"))).as("dm"))
       .transform(ds => Snapshots.cutSized(ds, n))
-    // raw observed dangling mass of the last MATERIALIZED round (Long
-    // for the scaled variant, Double for the float one; null ⇒ no
-    // dangling rows ⇒ only read when hasDangling is false)
+    // raw observed dangling mass of the previous round (Long for the
+    // scaled variant, Double for the float one; null ⇒ no dangling
+    // rows ⇒ only read when hasDangling is false)
     var dmVal: Any = obs0.get("dm")
     var lastCp = ranks
     var converged = false
     for (i <- 1 to iterations if !converged) {
       val t0 = System.nanoTime()
-      val prevMaterialized = i == 1 || (i - 1) % checkpointEvery == 0
       val rsel = ranks.select(col("address"), col("score"))
       // contributions and the node roll-call ride ONE aggregation: the
       // per-edge contribution rows union a zero-contribution row per
@@ -170,29 +167,17 @@ object PageRank {
         .agg(max(col("is_seed")).as("is_seed"),
           max(col("is_dang")).as("is_dang"),
           sum(col("contrib")).as("contrib"))
-      val dmAsLiteral = e.sparkSession.conf
-        .get("spark.graft.graph.dmLiteral", "true").toBoolean
+      // the previous round is checkpointed and its dangling mass was
+      // observed during that materialization: fold it in as a literal
+      // — the identical value a 1-row aggregate would produce, with
+      // zero extra jobs
       val withDm =
         if (!hasDangling) joined
-        else if (prevMaterialized && dmAsLiteral)
-          // previous round is checkpointed and its dangling mass was
-          // observed during that materialization: fold it in as a
-          // literal — the identical value the 1-row aggregate would
-          // produce, with zero extra jobs
-          joined.withColumn("dm",
-            if (dmVal == null) zero else lit(dmVal))
-        else {
-          // un-materialized previous round (checkpointEvery > 1): the
-          // mass is a lazy 1-row aggregate over the rank frame, folded
-          // in via broadcast cross join (no per-iteration action)
-          val dangling = ranks.filter(col("is_dang") === 1)
-            .agg(coalesce(sum(col("score")), zero).as("dm"))
-          joined.crossJoin(broadcast(dangling))
-        }
+        else joined.withColumn("dm", if (dmVal == null) zero else lit(dmVal))
       ranks = withDm.select(col("address"), col("is_seed"), col("is_dang"),
         update(n, s, col("contrib"),
           if (hasDangling) Some(col("dm")) else None).as("score"))
-      if (i % checkpointEvery == 0 && i < iterations) {
+      if (i < iterations) {
         val obsI = org.apache.spark.sql.Observation()
         ranks = ranks
           .observe(obsI,
@@ -217,7 +202,7 @@ object PageRank {
         }
         // retire the superseded comparand's blocks: the new eager
         // checkpoint is self-contained, so without this, block-manager
-        // storage grows with iterations / checkpointEvery
+        // storage grows with iterations
         val retired = lastCp
         lastCp = ranks
         if (retired ne ranks) retired.unpersist()
@@ -233,20 +218,19 @@ object PageRank {
     *   0 keeps the exact fixed-iteration schedule
     * @return (address, score) */
   def run(edges: DataFrame, iterations: Int = 20, damping: Double = 0.85,
-          checkpointEvery: Int = 1, tolerance: Double = 0.0,
+          tolerance: Double = 0.0,
           onIter: (Int, Double) => Unit = (_, _) => ()): DataFrame =
-    floatLoop(edges, None, iterations, damping, checkpointEvery,
-      tolerance, onIter)
+    floatLoop(edges, None, iterations, damping, tolerance, onIter)
 
   /** One float body for both the uniform and personalized variants —
     * with no seeds every node is a seed and the recurrence reduces to
     * classic PageRank, so the formulas cannot drift apart. */
   private def floatLoop(edges: DataFrame, seeds: Option[DataFrame],
                         iterations: Int, damping: Double,
-                        checkpointEvery: Int, tolerance: Double = 0.0,
+                        tolerance: Double = 0.0,
                         onIter: (Int, Double) => Unit = (_, _) => ())
       : DataFrame =
-    loop(edges, iterations, checkpointEvery, seeds = seeds,
+    loop(edges, iterations, seeds = seeds,
       onIter = onIter,
       tolerance = if (tolerance > 0) Some(tolerance) else None,
       init = (_, s) => col("is_seed") * lit(1.0 / s),
@@ -277,21 +261,18 @@ object PageRank {
     * @return (address, score) with score = rank · scale as a long */
   def runScaled(edges: DataFrame, iterations: Int = 10,
                 scale: Long = 1000000000000L,
-                checkpointEvery: Int = 1,
                 onIter: (Int, Double) => Unit = (_, _) => (),
                 toleranceScaled: Long = 0L): DataFrame =
-    scaledLoop(edges, None, iterations, scale, checkpointEvery, onIter,
-      toleranceScaled)
+    scaledLoop(edges, None, iterations, scale, onIter, toleranceScaled)
 
   /** One integer-scaled body for both variants — see [[floatLoop]].
     * `toleranceScaled` is in score units (1/scale). */
   private def scaledLoop(edges: DataFrame, seeds: Option[DataFrame],
                          iterations: Int, scale: Long,
-                         checkpointEvery: Int,
                          onIter: (Int, Double) => Unit = (_, _) => (),
                          toleranceScaled: Long = 0L)
       : DataFrame =
-    loop(edges, iterations, checkpointEvery, onIter = onIter, seeds = seeds,
+    loop(edges, iterations, onIter = onIter, seeds = seeds,
       tolerance =
         if (toleranceScaled > 0) Some(toleranceScaled.toDouble) else None,
       init = (_, s) => expr(s"is_seed * ${scale / s}L"),
@@ -312,9 +293,9 @@ object PageRank {
   /** Personalized (seeded) PageRank, float variant — see
     * [[runScaledPersonalized]] for the contract. */
   def runPersonalized(edges: DataFrame, seeds: DataFrame,
-                      iterations: Int = 20, damping: Double = 0.85,
-                      checkpointEvery: Int = 1): DataFrame =
-    floatLoop(edges, Some(seeds), iterations, damping, checkpointEvery)
+                      iterations: Int = 20, damping: Double = 0.85)
+      : DataFrame =
+    floatLoop(edges, Some(seeds), iterations, damping)
 
   /** Personalized (seeded) PageRank, integer-scaled: teleport and
     * dangling mass go only to `seeds` (a frame with a `node` column),
@@ -324,9 +305,8 @@ object PageRank {
     * both share one loop and the same bit-reproducibility contract. */
   def runScaledPersonalized(edges: DataFrame, seeds: DataFrame,
                             iterations: Int = 10,
-                            scale: Long = 1000000000000L,
-                            checkpointEvery: Int = 1): DataFrame =
-    scaledLoop(edges, Some(seeds), iterations, scale, checkpointEvery)
+                            scale: Long = 1000000000000L): DataFrame =
+    scaledLoop(edges, Some(seeds), iterations, scale)
 
   /** Ranked extract (W3): scores descending, deterministic tie-break. */
   def ranked(scores: DataFrame): DataFrame =

@@ -14,8 +14,7 @@ import org.apache.spark.storage.StorageLevel
   * the flat DISK_ONLY default cost the sf0.1 graph family ~18% for
   * snapshots that were KB-sized):
   *
-  *  1. an EXPLICIT level always wins — session conf [[ConfKey]], env
-  *     `SPARK_GRAFT_SNAPSHOT_LEVEL` (the probe-main A/B hook);
+  *  1. an EXPLICIT level always wins — session conf [[ConfKey]];
   *  2. [[cutSized]] (a caller-known row count: KCore's peel size,
   *     PageRank's node count, CC's label count) compares against
   *     [[MemRowsKey]] — small snapshots go MEMORY_AND_DISK,
@@ -79,13 +78,9 @@ object Snapshots {
     * ≤ +0.8 s at sf0.1, vs an 8g driver OOM the other way). */
   val DefaultMemBytes: Long = 32L << 20
 
-  /** Explicit override: session conf first, env fallback (so
-    * single-purpose probe mains — QueryProfile, GraphScaleProbe — can
-    * A/B levels without a conf flag of their own). */
+  /** Explicit override from the session conf ([[ConfKey]]). */
   private def explicitLevel(ds: Dataset[_]): Option[StorageLevel] =
-    ds.sparkSession.conf.getOption(ConfKey)
-      .orElse(sys.env.get("SPARK_GRAFT_SNAPSHOT_LEVEL"))
-      .map(StorageLevel.fromString)
+    ds.sparkSession.conf.getOption(ConfKey).map(StorageLevel.fromString)
 
   /** True when an explicit level override is in force — callers that
     * would otherwise run a sizing pass (e.g. Bfs's edge count) can

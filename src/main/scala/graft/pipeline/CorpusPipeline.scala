@@ -104,7 +104,7 @@ object CorpusPipeline {
       funnel += StageCount(name, o.get("n").asInstanceOf[Long],
         o.get("tok").asInstanceOf[Long])
     // every stage's materialization runs under a job description
-    // ("funnel:<stage>") so a listener (tools/FunnelProfile) can
+    // ("funnel:<stage>") so a SparkListener can
     // attribute wall time to stages without guessing from job ids —
     // zero-cost observability, the per-stage twin of the Observation
     // row/token accounting above
@@ -144,7 +144,7 @@ object CorpusPipeline {
       .orderBy(col("__q"), col("doc_id"))
     val cw = Window.partitionBy(col("source"))
     // one split + one fold for lang AND quality (TextAnalysis
-    // .gateFeatures — FeatureProbe: 50.4 → 29.9 s at sf10, values
+    // .gateFeatures — FeatureProbe@25567d8: 50.4 → 29.9 s at sf10, values
     // bit-identical to the separate langIdCols/qualityCol trees)
     val feat = describing("gates_features")(TextAnalysis
       .gateFeatures(input)

@@ -120,6 +120,6 @@ object FallbackInventory {
 
   /** The adjudicated registry allowlist: query name → fallback class
     * names it is PERMITTED to evaluate. Populated from the round-14
-    * FallbackInventoryProbe run; see each group's adjudication. */
+    * FallbackInventoryProbe@25567d8 run; see each group's adjudication. */
   val allowlist: Map[String, Set[String]] = FallbackAllowlist.entries
 }

@@ -100,7 +100,7 @@ object ProductQuantizer {
     * ADC candidates per query with the exact cosine (joining candidate
     * ids back to `embeddings`) before taking k.
     *
-    * Real-corpus recall@5 vs exact cosine (FloatAnnDialProbe, r17;
+    * Real-corpus recall@5 vs exact cosine (FloatAnnDialProbe@25567d8, r17;
     * subspaces=8, iters=3, dims=64; full table in SCALE_AUDIT):
     * {{{
     * recall@5 (sf0.01 / sf0.1):

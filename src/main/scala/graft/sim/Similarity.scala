@@ -107,7 +107,8 @@ object Similarity {
     * specification) evaluated one lambda + allocation per CELL per row
     * on every semantic-dedup corpus row, every IVF corpus row, and
     * every Lloyd iteration — the exact pattern round 14's
-    * SemanticIntScaleProbe measured at 8.5–60× on the integer twin. */
+    * SemanticIntScaleProbe@25567d8 measured at 8.5–60× on the integer
+    * twin. */
   private[graft] def nearestCell(v: Column, centroids: Seq[Seq[Double]]): Column =
     org.apache.spark.sql.graftbridge.Bridge.column(
       graft.functions.NearestCellsFloat(
@@ -218,7 +219,7 @@ object Similarity {
     * then the standard nprobe probe. This is the 100 TB similarity-search
     * path: train on a sample, index in one pass, probe sub-linearly.
     *
-    * Real-corpus recall@5 vs exact cosine (FloatAnnDialProbe, r17;
+    * Real-corpus recall@5 vs exact cosine (FloatAnnDialProbe@25567d8, r17;
     * near-uniform test corpus — the hard case, clustered production
     * corpora sit above; full table in SCALE_AUDIT):
     * {{{
@@ -318,7 +319,7 @@ object Similarity {
     * (table, bucket) — shuffle-hash-joinable at any scale, never a
     * cross product; dedup shuffles only candidate pairs.
     *
-    * Real-corpus recall@5 vs exact cosine (FloatAnnDialProbe, r17;
+    * Real-corpus recall@5 vs exact cosine (FloatAnnDialProbe@25567d8, r17;
     * full table in SCALE_AUDIT):
     * {{{
     * recall@5 (sf0.01 / sf0.1), planes=8:

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale audit: for every query, count the plan features that decide
   * 100 TB behavior — shuffles (Exchange), broadcast joins vs shuffle
   * joins, nested loops / cartesian products (scale killers), scan
@@ -38,14 +36,7 @@ object PlanAudit {
     if (bytes == 0L) "0" else f"${bytes / 1e3}%.1f"
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
     val d = "/root/testdata/sf0.001"
@@ -93,7 +84,8 @@ object PlanAudit {
     md ++= "axes). `pushed/scans` = parquet scans with at least one\n"
     md ++= "pushed filter over total scans (scans of whole small dims\n"
     md ++= "legitimately push nothing). `shufW`/`spill` are MEASURED\n"
-    md ++= "(listener task metrics at sf0.001, local[4]): total shuffle\n"
+    md ++= "(listener task metrics at sf0.001, " +
+      s"local[${graft.Session.cpus}]): total shuffle\n"
     md ++= "bytes written and disk+memory spill per query — spill should\n"
     md ++= "be 0 at this scale; bold flags any.\n\n"
     md ++= header.mkString("| ", " | ", " |\n")
@@ -145,7 +137,7 @@ object PlanAudit {
         |their upstream scan/join shapes are audited by their specs and by
         |the non-checkpointed queries sharing the same operators.
         |
-        |## PageRank skew probe (graft.tools.PageRankSkewProbe)
+        |## PageRank skew probe (PageRankSkewProbe@25567d8)
         |
         |`runScaled`, 10 iterations, 200k nodes / 2.47M edges, local[32],
         |broadcast joins disabled (the at-scale regime — ranks, one row
@@ -170,7 +162,7 @@ object PlanAudit {
         |regime. `ops/Skew.saltedJoin` remains available if a real
         |graph's hot key ever dominates a partition.
         |
-        |## Frontier/peel scale probe (graft.tools.GraphScaleProbe)
+        |## Frontier/peel scale probe (GraphScaleProbe@25567d8)
         |
         |Bfs.boundedBfs and KCore.peel at 1× and 10× synthetic edge
         |counts (hub-spine multigraph, broadcast joins disabled),

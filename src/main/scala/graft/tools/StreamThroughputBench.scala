@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.jobs.RawPersistJob
 import graft.streaming.ReplayServer
@@ -28,13 +27,7 @@ object StreamThroughputBench {
     val n = args.headOption.map(_.toInt).getOrElse(20000)
     val out = args.drop(1).headOption.getOrElse(
       java.nio.file.Files.createTempDirectory("graft_stput").toString)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
 
     val lines = (0L until n).map(blockLine)
     println(s"[stput] replaying $n block lines (2 txs each) → $out")

@@ -12,7 +12,7 @@ import graft.text.Bpe
   * specifications — the NgramKernelSpec precedent). The kernel carries
   * q105's training rounds and q107's encode, both per-WORD costs over
   * the distinct-word vocabulary frame (the corpus-soft share
-  * BpeVocabProbe measured vocab-linear). */
+  * BpeVocabProbe@25567d8 measured vocab-linear). */
 class BpeKernelSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
 

@@ -16,27 +16,9 @@ class ExtensionInjectionSpec extends AnyFunSuite {
 
   test("spark.sql.extensions conf alone wires functions + optimizer " +
     "rule + planner strategy in a fresh JVM") {
-    val javaBin = new _root_.java.io.File(new _root_.java.io.File(
-      sys.props("java.home"), "bin"), "java").getAbsolutePath
-    // same module opens the build gives every forked Spark JVM
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar")
-      .flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq("-Xmx2g", "-cp",
-      sys.props("java.class.path"), "graft.tools.ExtensionsDemo")
-    val out = new StringBuilder
-    val logger = scala.sys.process.ProcessLogger(
-      l => out.synchronized { out.append(l).append('\n') },
-      l => out.synchronized { out.append(l).append('\n') })
-    val code = scala.sys.process.Process(cmd).run(logger).exitValue()
+    val (code, out) = ForkedJvm.run("graft.tools.ExtensionsDemo")
     assert(code == 0 &&
-      out.toString.contains("extensions injection OK"),
-      s"exit=$code\n${out.toString.takeRight(3000)}")
+      out.contains("extensions injection OK"),
+      s"exit=$code\n${out.takeRight(3000)}")
   }
 }

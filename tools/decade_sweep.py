@@ -13,7 +13,7 @@ operators, alongside the default dup-stress sweep.
 Known-debt tail queries (the big allocators whose in-sweep numbers
 have been GC-contaminated by their predecessors in every sweep since
 r9 — q88 189 s in-sweep vs 41 s isolated was the chronic case) run
-ONE-PER-JVM via graft.tools.QueryProfile and their isolated min
+ONE-PER-JVM via `graft.tools.Probe time` and their isolated min
 replaces the in-sweep figure in `queries`/`ratios`, so the artifact
 the >2x-ratio gate reads is right by construction. The raw in-sweep
 numbers are preserved under `insweep_queries`; the spliced names are
@@ -110,7 +110,7 @@ def run_bench(sf_dir):
 
 
 def run_isolated(sf_dir, names, reps=3):
-    """One fresh JVM per debt query (graft.tools.QueryProfile): the
+    """One fresh JVM per debt query (`graft.tools.Probe time`): the
     isolated protocol, min of `reps` warm reps per query."""
     out = {}
     env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
@@ -120,14 +120,14 @@ def run_isolated(sf_dir, names, reps=3):
     for name in names:
         r = subprocess.run(
             ["java", "-XX:+IgnoreUnrecognizedVMOptions", "-Xmx96g",
-             *ADD_OPENS, "-cp", cp, "graft.tools.QueryProfile",
+             *ADD_OPENS, "-cp", cp, "graft.tools.Probe", "time",
              name, str(reps)],
             env=env, cwd=REPO, capture_output=True, text=True, check=True)
         for line in r.stdout.splitlines():
             if line.startswith("PROFILE") and name in line:
                 out[name] = float(line.rsplit("min=", 1)[1])
         if name not in out:
-            sys.exit(f"QueryProfile produced no row for {name}:\n"
+            sys.exit(f"Probe time produced no row for {name}:\n"
                      + r.stdout[-2000:])
         print(f"  isolated {name}: {out[name]:.2f} s", flush=True)
     return out
